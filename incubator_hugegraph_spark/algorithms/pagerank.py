@@ -31,6 +31,7 @@ from incubator_hugegraph_spark.graph import (
     checkpointed,
     no_aqe,
     release_ckpt,
+    slots,
 )
 
 # Broadcast the O(|V|) rank/component vector only while the per-round
@@ -55,8 +56,7 @@ VECTOR_ROWS_PER_PARTITION = 250_000
 
 
 def vector_partitions(n: int, spark) -> int:
-    cap = int(spark.sparkContext.defaultParallelism)
-    return max(1, min(cap, n // VECTOR_ROWS_PER_PARTITION + 1))
+    return max(1, min(slots(spark), n // VECTOR_ROWS_PER_PARTITION + 1))
 
 
 def vertex_index(graph: PropertyGraph) -> DataFrame:
@@ -76,10 +76,9 @@ def vertex_index(graph: PropertyGraph) -> DataFrame:
     identical strings. The mapping is eagerly checkpointed so encode
     and decode read the SAME materialized assignment (mono ids are
     order-dependent; a recompute could reassign)."""
-    n = int(graph.spark.sparkContext.defaultParallelism)
     return checkpointed(
         graph.vertices.select("id")
-        .repartitionByRange(n, "id")
+        .repartitionByRange(slots(graph.spark), "id")
         .sortWithinPartitions("id")
         .withColumn("vi", F.monotonically_increasing_id()))
 
@@ -139,9 +138,13 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     # the RAW string edges so multi-edges to non-vertex endpoints
     # count exactly as before (the encode's inner join would drop
     # them; their messages were always discarded at the assembly join).
+    # e0 is persisted so deg and the encoded edge cache read the
+    # adjacency and its degree cap once; it is released as soon as
+    # round 0 has materialized e.
     int_tier = bcast and fixed_rounds is None
     if int_tier:
         idx = vertex_index(graph)
+        e0 = e0.persist()
         deg0 = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         e = balanced(
             e0.join(F.broadcast(idx.withColumnRenamed("id", "src")),
@@ -151,13 +154,16 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
                   on="dst")
             .select("src", F.col("vi").alias("dst")),
             "dst").persist()
-        ranks = checkpointed(
-            idx.join(deg0.withColumnRenamed("src", "id"),
-                     on="id", how="left")
-            .select(F.col("vi").alias("id"), "deg")
-            .withColumn("rank", F.lit(1.0 / n))
-            .withColumn("old", F.lit(None).cast("double"))
-            .repartition(vector_partitions(n, graph.spark)))
+        # AQE off: e0's cache fills inside this job instead of in a
+        # table-cache query stage job of its own
+        with no_aqe(graph.spark):
+            ranks = checkpointed(
+                idx.join(deg0.withColumnRenamed("src", "id"),
+                         on="id", how="left")
+                .select(F.col("vi").alias("id"), "deg")
+                .withColumn("rank", F.lit(1.0 / n))
+                .withColumn("old", F.lit(None).cast("double"))
+                .repartition(vector_partitions(n, graph.spark)))
     else:
         # (src, dst) hash-partitioned by DST and persisted (NOT
         # checkpointed): keeping the repartition visible to Catalyst
@@ -223,25 +229,19 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
                                    F.col("old").alias("r2"))
                 if bcast:
                     # assembly as a RIGHT join from `incoming` to the
-                    # vector: no broadcast-build sub-job per round
-                    # (jobs/20-round run: 71 -> 51 measured).
-                    # CORRECTION (r11 session 2): the F.broadcast(vec)
-                    # hint does NOT apply here — build-right on a
-                    # right outer join is unsupported and Catalyst
-                    # plans a SortMergeJoin over the two ≤|V|-row
-                    # sides. Measured against the supported
-                    # alternative (vec ⟕ broadcast(incoming), one
-                    # extra build job/round): equal within noise on
-                    # the int tier (0.375 vs 0.400 s best per round at
-                    # sf0.1), so the fewer-jobs shape stays.
+                    # vector, planned as a SortMergeJoin over the two
+                    # ≤|V|-row sides (a right outer join cannot build
+                    # its right side, so no broadcast applies): no
+                    # broadcast-build sub-job per round, and per round
+                    # it costs the same as the supported broadcast
+                    # shape (vec ⟕ broadcast(incoming)).
                     # Convergence path only: the assembly's
                     # partitioning changes the float-sum order of
                     # total/changed by ~1 ULP, fine for the
                     # count-shaped bench queries but not for the
                     # hash-gated fixed-rounds path below, which keeps
                     # the vector-streamed shape.
-                    new = (incoming.join(F.broadcast(vec), on="id",
-                                         how="right")
+                    new = (incoming.join(vec, on="id", how="right")
                            .select("id", "deg", "r1", "r2",
                                    (F.lit(alpha / n) + F.lit(1.0 - alpha)
                                     * F.coalesce(F.col("inc"), F.lit(0.0)))
@@ -258,6 +258,8 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
                     F.sum(F.abs(F.col("r1") - F.col("r2")))
                     .alias("changed")).collect()[0])
                 total, changed = row["total"], row["changed"]
+                if t == 0 and int_tier:
+                    e0.unpersist()  # round 0 materialized e from it
                 if changed is not None and changed < precision:
                     # converged at round t-1: `ranks` (built from
                     # prev's checkpoint) IS the result; drop the
@@ -307,5 +309,6 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     release_ckpt(prev)
     if int_tier:
         release_ckpt(idx)
+        e0.unpersist()  # no-op unless the loop ran no round
     e.unpersist()
     return out

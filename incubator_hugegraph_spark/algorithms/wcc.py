@@ -6,9 +6,12 @@ Min-id label propagation over the undirected adjacency:
     comp_{k+1}(v) = min(comp_k(v), min_{u ~ v} comp_k(u))
 
 until fixpoint (delta count == 0) or ``fixed_rounds``. Each round is
-one join + one groupBy-min; labels are strings so min = lexicographic
-min (deterministic), and the round count is bounded by graph diameter
-(small for this schema). `wcc_star` is the diameter-independent
+one join + one groupBy-min, and the round count is bounded by graph
+diameter (small for this schema). The label is the lexicographic min
+id (deterministic): on the string tier min over the id strings is
+that min directly; on the int tier the rounds take min over encoded
+longs, which is the same min only because ``vertex_index`` assigns
+longs in id order. `wcc_star` is the diameter-independent
 large-star/small-star variant for 100 TB graphs — identical result,
 O(log²) rounds.
 """

@@ -451,6 +451,21 @@ def iterate_hygiene(df: DataFrame, round_no: int, every: int = 1) -> DataFrame:
     return df
 
 
+def slots(spark: SparkSession) -> int:
+    """Partition count of one wave of tasks: the session's
+    ``spark.sql.shuffle.partitions``, which ``session.get_spark`` sets
+    to the ``local[N]`` core count unless ``SPARK_SHUFFLE_PARTITIONS``
+    sizes it for a cluster. Vendor runtimes set the conf to "auto"
+    under AQE; there it falls back to ``defaultParallelism``. Every
+    explicit partition count in the package derives from this, so a
+    loop running without AQE never schedules waves of near-empty
+    tasks."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return int(spark.sparkContext.defaultParallelism)
+
+
 def balanced(df: DataFrame, *keys: str,
              partitions: int | None = None) -> DataFrame:
     """Hash-repartition by ``keys`` before checkpointing a table an
@@ -459,14 +474,7 @@ def balanced(df: DataFrame, *keys: str,
     raw file splits (one fat lineitem partition next to tiny dims),
     and every round of the loop pays that straggler. One shuffle here
     buys balanced map sides for all k rounds."""
-    if partitions is None:
-        try:
-            partitions = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            # vendor runtimes set this conf to "auto" under AQE
-            partitions = df.sparkSession.sparkContext.defaultParallelism
-    n = partitions
+    n = partitions if partitions is not None else slots(df.sparkSession)
     return df.repartition(n, *keys) if keys else df.repartition(n)
 
 
@@ -559,9 +567,7 @@ def spread_small_input(df: DataFrame,
                        .stats().sizeInBytes()))
     except Exception:
         return df  # unknown size: leave the plan to Catalyst
-    sc = df.sparkSession.sparkContext
-    cap = int(sc.defaultParallelism)
-    want = min(cap, -(-size // max(1, target_bytes)))
+    want = min(slots(df.sparkSession), -(-size // max(1, target_bytes)))
     if want <= 1 or df.rdd.getNumPartitions() >= want:
         return df
     return df.repartition(want)

@@ -30,15 +30,26 @@ from incubator_hugegraph_spark.operators.bfs import prepared_adj
 
 def _nbrs(graph: PropertyGraph, direction: str,
           labels: list[str] | None, max_degree: int) -> DataFrame:
-    """Distinct neighbor pairs, checkpointed: every similarity
-    operator consumes this table 2-3 times (degree table + both join
-    sides). A persist would re-embed the full adj subtree in the plan
-    at every consumption (AQE re-plans each copy — see
-    fusiform_similarity's `a` note); the checkpoint materializes once
-    and collapses each consumption to a shallow RDD leaf."""
+    """Distinct neighbor pairs between live vertices, checkpointed:
+    every similarity operator consumes this table 2-3 times (degree
+    table + both join sides). A persist would re-embed the full adj
+    subtree in the plan at every consumption (AQE re-plans each copy
+    — see fusiform_similarity's `a` note); the checkpoint materializes
+    once and collapses each consumption to a shallow RDD leaf.
+
+    An edge whose endpoint is not in ``graph.vertices`` (a dangling
+    edge) is no neighbor: it is dropped after the degree cap,
+    exactly as the int tier's encode joins drop it, and as ram.py's
+    index does, so every tier sees the same neighbor sets."""
+    live = graph.vertices.select("id")
     return checkpointed(
         prepared_adj(graph, direction, labels, max_degree)
-        .select("src", "dst").distinct())
+        .select("src", "dst")
+        .join(live.withColumnRenamed("id", "src"), on="src",
+              how="left_semi")
+        .join(live.withColumnRenamed("id", "dst"), on="dst",
+              how="left_semi")
+        .distinct())
 
 
 def jaccard_top(graph: PropertyGraph, source: str, top: int,
@@ -115,7 +126,10 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
     from incubator_hugegraph_spark.algorithms.pagerank import (
         BROADCAST_VERTEX_LIMIT, vertex_index)
     int_tier = graph.vertices.count() <= BROADCAST_VERTEX_LIMIT
-    sdf = spark.createDataFrame([(s,) for s in sources], "source string")
+    # one row per distinct source: the degree join below is inner, so
+    # a repeated source would multiply its result rows
+    sdf = spark.createDataFrame([(s,) for s in dict.fromkeys(sources)],
+                                "source string")
     if int_tier:
         idx = vertex_index(graph)
         nbr = checkpointed(

@@ -506,7 +506,7 @@ def ram_jaccard_top_batch(graph: PropertyGraph, sources: list[str],
     out_src: list = []
     out_id: list = []
     out_jac: list = []
-    for s_str in sources:
+    for s_str in dict.fromkeys(sources):  # a repeated source: one result
         p = np.searchsorted(ids, s_str)
         if p >= n or ids[p] != s_str:
             continue

@@ -1,8 +1,12 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Local testing runs on ``local[N]``; the same config block is what we
-would ship on a 1000-executor cluster (AQE on, skew-join handling on,
-Arrow for the few pandas-UDF paths). Nothing here is test-only magic.
+Local runs use ``local[N]`` with N shuffle partitions, N =
+``SPARK_GRAFT_CPUS`` (default: the cores this process may run on), so
+every shuffle stage is one wave of tasks. The same config block is
+what we would ship on a 1000-executor cluster (AQE on, skew-join
+handling on, Arrow for the few pandas-UDF paths); there
+``SPARK_SHUFFLE_PARTITIONS`` sizes the shuffles for the data instead
+of the cores. Nothing here is test-only magic.
 """
 
 from __future__ import annotations
@@ -25,8 +29,6 @@ tune_allocator()
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-DEFAULT_SHUFFLE_PARTITIONS = "32"
-
 # G1 uncommits committed heap above MaxHeapFreeRatio after a GC cycle;
 # on this host class every uncommitted page is discarded host-side and
 # refaults at 7-11 MB/s under pressure (_alloc.py), so the JVM must
@@ -36,15 +38,31 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 DEFAULT_DRIVER_JAVA_OPTS = "-XX:MaxHeapFreeRatio=100"
 
 
+def _usable_cores() -> int:
+    """Cores this process may run on (its CPU affinity mask, which
+    container CPU sets narrow), or the machine's count where the OS
+    has no affinity call."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "incubator-hugegraph-spark") -> SparkSession:
     """Build (or fetch) the session.
 
-    At 100 TB the only knobs that change are shuffle partitions /
-    maxPartitionBytes (sized so a partition fits executor memory) and
-    the master URL; the adaptive + skew settings below are the
-    load-bearing ones and stay identical.
+    Runs on ``local[N]`` with ``spark.sql.shuffle.partitions`` = N,
+    N = ``SPARK_GRAFT_CPUS`` (default ``_usable_cores()``): a shuffle
+    stage is one wave of N tasks, and iterative loops that run with
+    AQE off (``graph.no_aqe``) schedule no near-empty extra waves.
+
+    At 100 TB the only knobs that change are shuffle partitions
+    (``SPARK_SHUFFLE_PARTITIONS``, sized so a partition fits executor
+    memory), maxPartitionBytes and the master URL
+    (``SPARK_MASTER_OVERRIDE``); the adaptive + skew settings below
+    are the load-bearing ones and stay identical.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cores())
     builder = (
         SparkSession.builder.appName(app_name)
         # local[N] runs everything in the driver JVM — size its heap
@@ -56,8 +74,8 @@ def get_spark(app_name: str = "incubator-hugegraph-spark") -> SparkSession:
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
                                DEFAULT_DRIVER_JAVA_OPTS))
-        .config("spark.sql.shuffle.partitions", os.environ.get(
-            "SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions",
+                os.environ.get("SPARK_SHUFFLE_PARTITIONS") or cpus)
         # AQE: runtime re-plan — coalesce tiny shuffle partitions,
         # convert to broadcast joins when a frontier turns out small,
         # split skewed partitions (the reference handles skew with

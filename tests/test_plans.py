@@ -95,18 +95,55 @@ def test_incremental_wcc_broadcasts_batch(spark):
     assert all("BuildRight" in l for l in joins), plan
 
 
-def test_jaccard_top_batch_filters_degree_before_broadcast(graph):
-    """Round-3 scale fix guard: the source-degree table is semi-joined
-    down to |sources| rows before its broadcast — the plan must contain
-    the LeftSemi broadcast join, and every BroadcastExchange input must
-    be either a LocalTableScan (the source list) or sit above that
-    semi-filter, never a bare aggregate of the full edge table."""
+def _holds_source_list(node) -> bool:
+    """True when the plan subtree reads the source list: a leaf whose
+    only output column is ``source``."""
+    ch = node.children()
+    if ch.size() == 0:
+        out = node.output()
+        return [out.apply(i).name() for i in range(out.size())] \
+            == ["source"]
+    return any(_holds_source_list(ch.apply(i)) for i in range(ch.size()))
+
+
+def _degree_paths(node, in_bx=False, guarded=False):
+    """Walk a JVM physical plan; yield, for every count(1) aggregate
+    below a BroadcastExchange, whether the path from the nearest such
+    exchange down to it crosses a join whose other side holds the
+    source list."""
+    name = node.nodeName()
+    if name.startswith("AdaptiveSparkPlan"):
+        yield from _degree_paths(node.initialPlan(), in_bx, guarded)
+        return
+    if name == "BroadcastExchange":
+        in_bx, guarded = True, False
+    elif (in_bx and name == "HashAggregate"
+          and "count(1)" in node.toString().splitlines()[0]):
+        yield guarded
+    ch = node.children()
+    kids = [ch.apply(i) for i in range(ch.size())]
+    for i, kid in enumerate(kids):
+        via_sources = "Join" in name and any(
+            _holds_source_list(k) for j, k in enumerate(kids) if j != i)
+        yield from _degree_paths(kid, in_bx, guarded or via_sources)
+
+
+def test_jaccard_top_batch_filters_degree_before_broadcast(graph,
+                                                           monkeypatch):
+    """The O(|V|) degree table is cut down to |sources| rows before it
+    is broadcast, on the int tier and on the string tier: it reaches
+    its BroadcastExchange only through the join with the source list,
+    never as a bare aggregate of the full edge table."""
+    import incubator_hugegraph_spark.algorithms.pagerank as prmod
     from incubator_hugegraph_spark.operators.similarity import (
         jaccard_top_batch)
-    df = jaccard_top_batch(graph, ["customer!1", "customer!2"], 5,
-                           engine="dist")
-    plan = _plan(df)
-    assert "LeftSemi, BuildRight" in plan, plan
+    for limit in (prmod.BROADCAST_VERTEX_LIMIT, 0):   # int, string tier
+        monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", limit)
+        df = jaccard_top_batch(graph, ["customer!1", "customer!2"], 5,
+                               engine="dist")
+        paths = list(_degree_paths(
+            df._jdf.queryExecution().executedPlan()))
+        assert paths and all(paths), _plan(df)
 
 
 def test_pagerank_round_has_no_edge_shuffle(graph):

@@ -541,20 +541,59 @@ def test_ram_jaccard_matches_distributed(graph):
                     != F.coalesce("j2", F.lit(-2))).count() == 0
 
 
-def test_jaccard_int_tier_matches_string_tier(graph, monkeypatch):
-    """r11 session 2 (§2.3 narrower types): the broadcast-gated long-
-    keyed jaccard_top_batch must be ROW-IDENTICAL to the string-keyed
-    tier — jaccard is an integer-count ratio and the rank tie-breaks
-    run on the order-preserving encoding."""
+def _dangling_graph(spark, graph):
+    """4 vertices a-d; edges a→c, b→c, b→d and a dangling a→x (no
+    vertex x). Without x, N(a) = {c} and N(b) = {c, d} under BOTH."""
+    from incubator_hugegraph_spark.graph import PropertyGraph
+    v = spark.createDataFrame([(x, "v", {}, None) for x in "abcd"],
+                              graph.vertices.schema)
+    e = spark.createDataFrame(
+        [(s, d, "e", "", {}, None)
+         for s, d in [("a", "c"), ("b", "c"), ("b", "d"), ("a", "x")]],
+        graph.edges.schema)
+    return PropertyGraph(spark=spark, vertices=v, edges=e,
+                         schema=graph.schema)
+
+
+def test_jaccard_int_tier_matches_string_tier(spark, graph, monkeypatch):
+    """The broadcast-gated long-keyed jaccard_top_batch must be
+    ROW-IDENTICAL to the string-keyed tier — jaccard is an
+    integer-count ratio and the rank tie-breaks run on the
+    order-preserving encoding — on TPC-H and on a graph with a
+    dangling edge, which no tier counts as a neighbor."""
     import incubator_hugegraph_spark.algorithms.pagerank as prmod
     from incubator_hugegraph_spark.operators.similarity import (
         jaccard_top_batch)
-    srcs = [f"customer!{i}" for i in range(30)] + ["missing!7"]
-    a = jaccard_top_batch(graph, srcs, 10, engine="dist")   # int tier
-    monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", 0)
-    b = jaccard_top_batch(graph, srcs, 10, engine="dist")   # string tier
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    dangling = _dangling_graph(spark, graph)
+    limit = prmod.BROADCAST_VERTEX_LIMIT
+    for g, srcs in [
+            (graph, [f"customer!{i}" for i in range(30)] + ["missing!7"]),
+            (dangling, list("abcdx"))]:
+        monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", limit)
+        a = jaccard_top_batch(g, srcs, 10, engine="dist")   # int tier
+        monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", 0)
+        b = jaccard_top_batch(g, srcs, 10, engine="dist")   # string tier
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
+    got = sorted(map(tuple, b.collect()))     # dangling graph, string tier
+    ram = jaccard_top_batch(dangling, list("abcdx"), 10, engine="ram")
+    assert got == sorted(map(tuple, ram.collect()))
+    assert ("a", "b", 0.5) in got
+    assert not any("x" in r[:2] for r in got)
+
+
+def test_jaccard_top_batch_duplicate_sources(graph):
+    """A repeated source returns its rows once, on both engines."""
+    from incubator_hugegraph_spark.operators.similarity import (
+        jaccard_top_batch)
+    for engine in ("dist", "ram"):
+        once = jaccard_top_batch(graph, ["customer!1", "customer!2"], 5,
+                                 engine=engine)
+        twice = jaccard_top_batch(
+            graph, ["customer!1", "customer!1", "customer!2"], 5,
+            engine=engine)
+        assert sorted(map(tuple, twice.collect())) \
+            == sorted(map(tuple, once.collect())), engine
 
 
 @pytest.mark.slow  # verify-budget tier (r11): see pytest.ini
